@@ -1,4 +1,5 @@
 package graft
+import java.util.Locale
 import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -86,7 +87,8 @@ object Bench {
     val (canPostS, canPostM, canPostCk) = graft.tools.HostCanary.measure(2)
     val canaryJson = {
       def leg(s: Double, m: Double, ck: Long) =
-        f"""{"single_mops":$s%.1f,"x32_mops":$m%.1f,"ck":${ck & 0xff}}"""
+        """{"single_mops":%.1f,"x32_mops":%.1f,"ck":%d}"""
+          .formatLocal(Locale.ROOT, s, m, ck & 0xff)
       s""""canary_pre":${leg(canPreS, canPreM, canPreCk)},""" +
         s""""canary_post":${leg(canPostS, canPostM, canPostCk)}"""
     }
@@ -105,7 +107,7 @@ object Bench {
     // stdout values at 3 decimals (1 ms — below bench noise): ~30%
     // shorter line, more keys inside the captured tail. bench_full.json
     // keeps full precision.
-    val qs = dict(ordered, v => f"$v%.3f")
+    val qs = dict(ordered, v => "%.3f".formatLocal(Locale.ROOT, v))
     val qsFull = dict(ordered, _.toString)
     // total sums only successful queries; the failed list + their -1
     // entries make a red query impossible to miss in the JSON

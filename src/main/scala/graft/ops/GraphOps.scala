@@ -1,10 +1,16 @@
 package graft.ops
 
+import java.math.{BigDecimal => Dec, RoundingMode}
+import org.apache.spark.HashPartitioner
 import org.apache.spark.graphx.{Edge => GXEdge, Graph => GXGraph}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType,
+  StringType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 import graft.Tables
+import scala.collection.mutable
 import scala.util.chaining._
 
 /** Graph / ETL operator surface (SURVEY.md §2.11) — the reference's core
@@ -928,10 +934,11 @@ object GraphOps {
     * bipartite order/part graph where orders can only ever be hubs and
     * parts only ever authorities). 4 fixed iterations; top-20 ledger.
     *
-    * DETERMINISM: every cross-row sum rides DECIMAL(38,18) (the
-    * [[pageRankOn]] discipline); the per-iteration L1 normalizations
-    * are 1-row aggregates joined back on the non-foldable all-zeros
-    * key — NO driver-side actions, the whole 4-iteration plan is lazy.
+    * DETERMINISM: every cross-row sum rides DECIMAL(38,18), so sums
+    * are exact and independent of partition order; the per-iteration
+    * L1 normalizations are 1-row aggregates joined back on the
+    * non-foldable all-zeros key — NO driver-side actions, the whole
+    * 4-iteration plan is lazy.
     * The division is (30,18)/(30,12): Spark's allowPrecisionLoss
     * adjustment keeps 14 fractional digits at those operand types
     * (a (38,18)/(38,18) division would be cut to scale 6 — BELOW the
@@ -1466,23 +1473,8 @@ object GraphOps {
     * top-20 nodes by rank, reported as rank×n (1.0 = uniform share) so
     * the number is scale-readable.
     *
-    * DETERMINISM: every cross-row sum rides DECIMAL(38,18) — rank
-    * contributions are computed row-locally (decimal division rounds
-    * identically wherever the row lives), summed exactly, and the two
-    * per-iteration scalars (total dangling mass; n) come back to the
-    * driver as exact BigDecimals re-embedded as literals. No float
-    * accumulation anywhere, so ranks are partition-order independent
-    * (asserted by a repartition test in GraphOpsSpec).
-    *
-    * Scale shape: per iteration ONE shuffle join of the edge set with
-    * the rank table on src (both partitioned by the same key across
-    * iterations) + a partial-aggregated sum by dst; the dangling scalar
-    * is a 1-row aggregate. Like [[ccLabels]] (and unlike the lazy
-    * kdQuantize chain), construction is EAGER — each iteration ends in
-    * a materialized local checkpoint so lineage stays constant-size
-    * across the fixed 10 rounds, with superseded rounds freed in-loop;
-    * at 100 TB the checkpoint swaps to parquet-between-rounds, the
-    * standard iterative-refinement shape. */
+    * Scale shape: one distinct-edge aggregation, the partition-local
+    * kernel of [[pageRankOn]], then a top-20 cut. */
   def pageRank(s: SparkSession, d: String): DataFrame = {
     val edges = Tables.lineitem(s, d)
       .select((col("l_orderkey") * 2).as("src"),
@@ -1499,122 +1491,169 @@ object GraphOps {
       .limit(20)
   }
 
+  /** One partition of [[pageRankOn]]'s static side: the sorted ids of
+    * the partition's nodes and the CSR adjacency of their out-edges.
+    * Node `i`'s targets are `dst(off(i))` until `dst(off(i + 1))`. */
+  private final class RankGraph(val ids: Array[Long], val off: Array[Int],
+      val dst: Array[Long]) extends Serializable {
+    def deg(i: Int): Int = off(i + 1) - off(i)
+  }
+
+  private object RankGraph {
+    /** `recs` holds (src, Some(dst)) and (dst, None) for every edge
+      * whose endpoint is keyed into this partition. */
+    def apply(recs: Iterator[(Long, Option[Long])]): RankGraph = {
+      val keys = Array.newBuilder[Long]
+      val pairs = Array.newBuilder[Long] // src, dst interleaved
+      recs.foreach { case (k, d) =>
+        keys += k
+        d.foreach { t => pairs += k; pairs += t }
+      }
+      // ids: the sorted distinct keys, deduplicated in place
+      val all = keys.result()
+      java.util.Arrays.sort(all)
+      var m = 0
+      for (j <- all.indices) {
+        if (m == 0 || all(j) != all(m - 1)) { all(m) = all(j); m += 1 }
+      }
+      val ids = java.util.Arrays.copyOf(all, m)
+      // CSR by counting sort: out-degree per node, prefix sums, fill
+      val e = pairs.result()
+      val at = Array.tabulate(e.length / 2)(
+        j => java.util.Arrays.binarySearch(ids, e(2 * j)))
+      val off = new Array[Int](ids.length + 1)
+      at.foreach(i => off(i + 1) += 1)
+      for (i <- ids.indices) off(i + 1) += off(i)
+      val fill = off.clone()
+      val dst = new Array[Long](at.length)
+      for (j <- at.indices) {
+        dst(fill(at(j))) = e(2 * j + 1); fill(at(j)) += 1
+      }
+      new RankGraph(ids, off, dst)
+    }
+  }
+
   /** Core of q_graph_pagerank over any (src, dst) long edge frame
     * (even ids decode as type "order", odd as "part" — callers with a
-    * different id scheme re-map the output). */
+    * different id scheme re-map the output). A duplicate edge counts
+    * once per copy, in out-degree and in contribution; edges with a
+    * null endpoint are ignored; an empty edge frame gives an empty
+    * result.
+    *
+    * DETERMINISM: ranks are `java.math.BigDecimal` at scale 18. Each
+    * contribution r/deg, the dangling share and each new rank round
+    * HALF_UP once to scale 18; every sum is exact. Ranks therefore do
+    * not depend on the partition count or the input layout (asserted
+    * in GraphOpsSpec).
+    *
+    * Scale shape — a partition-local iteration kernel on GraphX's
+    * co-partitioned vertex/edge layout (Gonzalez et al., OSDI 2014):
+    *  - Built once: the edges shuffle once to a `HashPartitioner` of
+    *    `spark.sql.shuffle.partitions` width. Each partition keeps its
+    *    nodes (sorted ids, out-degree) and the CSR adjacency of their
+    *    out-edges, persisted MEMORY_AND_DISK. This static side never
+    *    moves again.
+    *  - Per round: one `zipPartitions` of (ranks, graph) emits (dst,
+    *    contribution) pairs; `reduceByKey` pre-sums them within the
+    *    partition and shuffles them to the same partitioner, so a round
+    *    moves at most one record per distinct dst per partition; one
+    *    `zipPartitions` of (graph, sums) writes the new rank arrays. No
+    *    SQL is planned inside the loop.
+    *  - One action per round: the exact dangling-mass fold, a scalar
+    *    the next round needs. It also materializes the round, after
+    *    which the previous round is unpersisted. The last round stays
+    *    lazy until the result is consumed.
+    *  - Lineage is never truncated, so a lost block recomputes. The
+    *    persisted graph and rank rounds are released through
+    *    [[ScratchCache]]; the result stays computable after that
+    *    release. */
   def pageRankOn(edgesIn: DataFrame, iters: Int): DataFrame = {
-    val D = DecimalType(38, 18)
+    val s = edgesIn.sparkSession
     val cols = edgesIn.columns
-    val edges = edgesIn
-      .select(col(cols(0)).as("src"), col(cols(1)).as("dst"))
-      .localCheckpoint() // reused every iteration — materialize once
-    ScratchCache.defer(() => unpersistCheckpoint(edges))
-    val nodes = edges.select(col("src").as("id"))
-      .unionByName(edges.select(col("dst").as("id")))
-      .distinct()
-      .localCheckpoint()
-    ScratchCache.defer(() => unpersistCheckpoint(nodes))
-    val outdeg = edges.groupBy(col("src").as("id"))
-      .agg(count(lit(1)).as("deg"))
-      .localCheckpoint()
-    ScratchCache.defer(() => unpersistCheckpoint(outdeg))
-    // edge set PRE-PARTITIONED on src, materialized ONCE as a CACHE,
-    // not a checkpoint (r19: the doc above claimed "both partitioned
-    // by the same key across iterations" but the code never
-    // established it — and MEASURING it exposed that localCheckpoint
-    // does NOT carry outputPartitioning in Spark 4.x (LogicalRDD
-    // reports UnknownPartitioning), so a checkpointed repartition
-    // would be an exchange the planner cannot see. InMemoryRelation
-    // DOES preserve partitioning, so the per-iteration rank⋈edge join
-    // consumes hash(src) with no exchange and no re-shuffle of the
-    // static edge table — 5 edge exchanges gone. deg no longer rides
-    // the edge rows: it is carried on the rank table instead, so the
-    // r/deg division runs once per NODE rather than once per EDGE ROW
-    // (same expression, same exact decimal quotient).
-    // ... and pre-SORTED on src inside each partition: the cache also
-    // preserves outputOrdering, so the per-iteration sort-merge join
-    // skips the |E|-sized sort and only ever sorts the |V|-sized rank
-    // projection.
-    val edgesBySrc = ScratchCache.cache(
-      edges.repartition(col("src")).sortWithinPartitions(col("src")))
-    val n = nodes.count()
-    val one = new java.math.BigDecimal(1)
-    val bigN = new java.math.BigDecimal(n)
-    val uniform = one.divide(bigN, 18, java.math.RoundingMode.HALF_UP)
-    val base = new java.math.BigDecimal("0.15")
-      .divide(bigN, 18, java.math.RoundingMode.HALF_UP)
-    // the dangling-node SET is fixed across iterations (it depends only
-    // on the edge structure), so it is marked ONCE as a boolean carried
-    // through the rank checkpoints — the per-iteration dangling-mass
-    // probe is then a join-free scan + 1-row aggregate instead of a
-    // left_anti join against outdeg (halves the per-iteration passes
-    // over the rank table; values are bit-identical)
-    // deg rides the rank rows (null ⟺ dangling): the per-iteration
-    // r/deg division is then single-sided and runs on the |V|-sized
-    // rank table BEFORE the edge join instead of on every |E|-sized
-    // join output row — same expression, same exact decimal quotient
-    var ranks = nodes.join(outdeg, Seq("id"), "left")
-      .select(col("id"), lit(uniform).cast(D).as("r"),
-        col("deg").isNull.as("dangling"), col("deg"))
-      .localCheckpoint()
-    var prev: Option[DataFrame] = Some(ranks)
-    for (_ <- 1 to iters) {
-      // dangling mass as an exact driver-side scalar (the ccLabels
-      // precedent: tiny per-round probes in exchange for a clean
-      // distributed plan — a constant-key join would funnel every node
-      // through one reducer)
-      val dang = ranks
-        .agg(coalesce(sum(when(col("dangling"), col("r"))),
-          lit(0).cast(D)).as("d"))
-        .head().getDecimal(0)
-      val dangShare = dang.divide(bigN, 18, java.math.RoundingMode.HALF_UP)
-      // Per-iteration rank exchanges: the rank checkpoint re-enters
-      // each round with UnknownPartitioning (see the edgesBySrc note),
-      // so its consumers must exchange it. Both per-iteration
-      // consumers (the contribution join and the next-rank outer
-      // join) hang off the same repartition subtree, but column
-      // pruning projects each copy differently ((id, r, deg) vs
-      // (id, dangling, deg)), which defeats ReuseExchange — the plan
-      // carries TWO narrow |V|-row rank shuffles per iteration
-      // (plans/r19/q_graph_pagerank_after.txt). Accepted: forcing a
-      // single shared shuffle would need a per-iteration cache barrier
-      // whose materialization cost exceeds the ~1 narrow column it
-      // saves. The big win stays the static edge side. The merge
-      // hint pins the edge join to the co-partitioned sort-merge
-      // shape: without it the planner broadcasts the |E|-sized edge
-      // cache whenever it sizes under the threshold — a serial
-      // per-iteration driver build at bench scale and an impossible
-      // plan at 100 TB, where the edge side could never broadcast.
-      // The division + projection to (id, c) runs BEFORE the join: |V|
-      // divisions, 2 columns into the join. A dangling row's c is
-      // null (deg null); dangling ⟺ no out-edges ⟺ the id never
-      // matches an edge src, so the inner join drops those rows
-      // before any sum sees them.
-      val r2 = ranks.repartition(col("id"))
-      val contribs = r2
-        .select(col("id"), (col("r") / col("deg")).cast(D).as("c"))
-        .join(edgesBySrc.hint("merge"), col("id") === col("src"))
-        .groupBy(col("dst"))
-        .agg(sum(col("c")).cast(D).as("inSum"))
-        .withColumnRenamed("dst", "id")
-      val next = r2.select(col("id"), col("dangling"), col("deg"))
-        .join(contribs, Seq("id"), "left")
-        .select(col("id"),
-          (lit(base).cast(D) + lit(new java.math.BigDecimal("0.85")) *
-            (coalesce(col("inSum"), lit(0).cast(D)) +
-              lit(dangShare).cast(D))).cast(D).as("r"),
-          col("dangling"), col("deg"))
-        .localCheckpoint()
-      prev.foreach(unpersistCheckpoint)
-      prev = Some(next)
+    val part = new HashPartitioner(
+      s.conf.get("spark.sql.shuffle.partitions").toInt)
+    val graph = edgesIn
+      .select(col(cols(0)).cast("long"), col(cols(1)).cast("long"))
+      .na.drop()
+      .rdd
+      .flatMap { r =>
+        Iterator[(Long, Option[Long])](
+          (r.getLong(0), Some(r.getLong(1))), (r.getLong(1), None))
+      }
+      .partitionBy(part)
+      .mapPartitions(it => Iterator(RankGraph(it)),
+        preservesPartitioning = true)
+      .setName("pageRank.graph")
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    ScratchCache.defer(() => graph.unpersist(false))
+    val (n, nDangling) = graph
+      .map(g => (g.ids.length.toLong,
+        g.ids.indices.count(g.deg(_) == 0).toLong))
+      .fold((0L, 0L)) { case ((a, b), (c, d)) => (a + c, b + d) }
+    val rows =
+      if (n == 0) s.sparkContext.emptyRDD[Row]
+      else pageRankRounds(graph, part, n, nDangling, iters)
+    s.createDataFrame(rows, StructType(Seq(
+      StructField("ntype", StringType, nullable = false),
+      StructField("node", LongType, nullable = false),
+      StructField("rank_x_n", DoubleType, nullable = false))))
+  }
+
+  /** [[pageRankOn]]'s rounds over a built, persisted graph with `n > 0`
+    * nodes, `nDangling` of them without out-edges; returns the output
+    * rows of the last round, still lazy. */
+  private def pageRankRounds(graph: RDD[RankGraph], part: HashPartitioner,
+      n: Long, nDangling: Long, iters: Int): RDD[Row] = {
+    val bigN = Dec.valueOf(n)
+    val uniform = Dec.ONE.divide(bigN, 18, RoundingMode.HALF_UP)
+    val base = new Dec("0.15").divide(bigN, 18, RoundingMode.HALF_UP)
+    val damping = new Dec("0.85")
+    var ranks: RDD[Array[Dec]] =
+      graph.map(g => Array.fill(g.ids.length)(uniform))
+    // every dangling node starts at `uniform`, so the sum is a product
+    var dang = uniform.multiply(Dec.valueOf(nDangling))
+    var held: Option[RDD[Array[Dec]]] = None
+    for (round <- 1 to iters) {
+      val share = dang.divide(bigN, 18, RoundingMode.HALF_UP)
+      val sums = ranks.zipPartitions(graph) { (rs, gs) =>
+          val r = rs.next(); val g = gs.next()
+          g.ids.indices.iterator.filter(g.deg(_) > 0).flatMap { i =>
+            val c = r(i).divide(Dec.valueOf(g.deg(i).toLong), 18,
+              RoundingMode.HALF_UP)
+            (g.off(i) until g.off(i + 1)).iterator.map(k => (g.dst(k), c))
+          }
+        }
+        .reduceByKey(part, _.add(_))
+      val next = graph.zipPartitions(sums) { (gs, ss) =>
+          val g = gs.next()
+          val in = mutable.LongMap.from(ss)
+          Iterator(g.ids.map(id => base
+            .add(damping.multiply(in.getOrElse(id, Dec.ZERO).add(share)))
+            .setScale(18, RoundingMode.HALF_UP)))
+        }
+        .setName(s"pageRank.ranks.$round")
+      if (round < iters) {
+        next.persist(StorageLevel.MEMORY_AND_DISK)
+        dang = next.zipPartitions(graph) { (rs, gs) =>
+            val r = rs.next(); val g = gs.next()
+            Iterator(g.ids.indices.filter(g.deg(_) == 0)
+              .foldLeft(Dec.ZERO)((a, i) => a.add(r(i))))
+          }
+          .fold(Dec.ZERO)(_.add(_))
+        held.foreach(_.unpersist(false))
+        held = Some(next)
+      }
       ranks = next
     }
-    prev.foreach(p => ScratchCache.defer(() => unpersistCheckpoint(p)))
-    ranks.select(
-      when(col("id") % 2 === 0, "order").otherwise("part").as("ntype"),
-      expr("id div 2").as("node"), // integer div: '/' would go double
-      round((col("r") * lit(bigN).cast(D)).cast("double"), 6)
-        .as("rank_x_n"))
+    held.foreach(h => ScratchCache.defer(() => h.unpersist(false)))
+    ranks.zipPartitions(graph) { (rs, gs) =>
+      val r = rs.next(); val g = gs.next()
+      g.ids.indices.iterator.map { i =>
+        val id = g.ids(i)
+        Row(if (id % 2 == 0) "order" else "part", id / 2,
+          r(i).multiply(bigN).setScale(6, RoundingMode.HALF_UP).doubleValue)
+      }
+    }
   }
 
   /** q_kgx_validate — KGX/Biolink-style graph validation, the QC gate
@@ -1772,7 +1811,7 @@ object GraphOps {
           ec.select(col("v").as("u"), col("u").as("v")))
       // non-memo path: CHECKPOINT the (heavy) build, then CACHE its
       // repartition (r19). localCheckpoint drops outputPartitioning
-      // in Spark 4.x (measured — see pageRankOn/hitsOn), so the old
+      // in Spark 4.x (measured — see hitsOn), so the old
       // trunc(repartition(u)) re-entered every LPA/Louvain round with
       // UnknownPartitioning and each round re-exchanged its
       // aggregations. Caching the repartitioned build directly was

@@ -28,7 +28,13 @@ import org.apache.spark.sql.{Column, DataFrame}
   */
 object Par {
   /** A/B kill-switch (`spark.graft.spread=false` leaves layouts
-    * untouched) so spread-vs-no-spread adjudicates on one binary. */
+    * untouched) so spread-vs-no-spread adjudicates on one binary.
+    *
+    * Give it leaf scans only, or row-local projections of one. The
+    * width test reads `df.rdd.getNumPartitions`, which plans `df`
+    * eagerly; under AQE that runs every shuffle inside `df` right here,
+    * before the caller's own action, and outside its timing and failure
+    * handling. */
   def spread(df: DataFrame, key: Column): DataFrame = {
     val on = df.sparkSession.conf
       .get("spark.graft.spread", "true").toBoolean

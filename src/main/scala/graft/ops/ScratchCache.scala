@@ -1,14 +1,16 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
+import scala.util.control.NonFatal
 
 /** Registry for operator-local cached/checkpointed intermediates.
   *
   * Operators return LAZY DataFrames, so they cannot unpersist their own
   * multi-consumer intermediates before the caller has executed the
   * result — the cache would be gone before it was ever read. Instead
-  * every operator-local `.cache()` / `localCheckpoint` registers a
-  * release thunk here, and the HARNESS frees them at the right moment:
+  * every operator-local `.cache()` / `localCheckpoint` / persisted RDD
+  * registers a release thunk here, and the HARNESS frees them at the
+  * right moment:
   *
   *  - [[graft.Verify]] calls [[releaseAll]] after each query's output
   *    is written, so a full correctness pass (one run per query key)
@@ -54,11 +56,15 @@ object ScratchCache {
     * release rather than recomputing. Call releaseAll only once every
     * result derived from registered frames has been materialized
     * (collected/written/counted) — which is exactly how Verify, Bench
-    * and the specs use it. */
+    * and the specs use it.
+    *
+    * A release that throws a non-fatal exception is skipped so the rest
+    * still run; a fatal error propagates (the remaining registrations
+    * stay queued for the next call). */
   def releaseAll(): Unit = {
     var r = live.poll()
     while (r != null) {
-      try r() catch { case _: Throwable => () }
+      try r() catch { case NonFatal(_) => () }
       r = live.poll()
     }
   }

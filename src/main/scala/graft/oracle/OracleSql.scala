@@ -4173,9 +4173,9 @@ object OracleSql {
         |FROM c ORDER BY category""".stripMargin,
 
     // Fixed-5-iteration PageRank, unrolled like the k-core round CTEs.
-    // The Spark side is DECIMAL(38,18)-exact; this twin runs in DOUBLE,
-    // which is safe because (a) every intermediate Spark rounding happens
-    // at scale 15-18 where doubles carry the value to ~1e-21 absolute, so
+    // The Spark side is exact decimal at scale 18; this twin runs in
+    // DOUBLE, which is safe because (a) every intermediate Spark rounding
+    // happens at scale 18 where doubles carry the value to ~1e-21 absolute, so
     // the accumulated divergence at rank_x_n is ~1e-10, far below the
     // 5e-7 half-ulp of the 6-digit output rounding, and (b) the top-20
     // cut + ordering happen on the ROUNDED value with (ntype, node)

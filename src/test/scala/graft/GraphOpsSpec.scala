@@ -377,49 +377,104 @@ class GraphOpsSpec extends GraftSuite {
     assert(total == paired)
   }
 
-  test("pagerank matches an independent driver-side reference") {
-    import spark.implicits._
-    // 0→2, 0→4, 2→4, 4→0, plus 6 (dangling sink of 0): hand-sized
-    // graph with a cycle AND a dangling node so redistribution matters
-    val es = Seq((0L, 2L), (0L, 4L), (2L, 4L), (4L, 0L), (0L, 6L))
-    val edges = es.toDF("src", "dst")
-    // reference: plain Scala loop, same semantics (damping 0.85,
-    // uniform dangling redistribution), double precision
+  /** Plain-Scala PageRank (damping 0.85, uniform dangling
+    * redistribution, duplicate edges counted per copy) in double
+    * precision, as rank×n per node. */
+  private def driverPageRank(es: Seq[(Long, Long)], iters: Int)
+      : Map[Long, Double] = {
     val nodes = es.flatMap(e => Seq(e._1, e._2)).distinct.sorted
     val n = nodes.size
     val out = es.groupBy(_._1).view.mapValues(_.size).toMap
     var r = nodes.map(_ -> 1.0 / n).toMap
-    for (_ <- 1 to 10) {
+    for (_ <- 1 to iters) {
       val dang = nodes.filter(!out.contains(_)).map(r).sum
       val in = es.groupBy(_._2).view.mapValues(
         _.map { case (s, _) => r(s) / out(s) }.sum).toMap
       r = nodes.map(v =>
         v -> (0.15 / n + 0.85 * (in.getOrElse(v, 0.0) + dang / n))).toMap
     }
-    val got = GraphOps.pageRankOn(edges, iters = 10).collect()
-      .map(x => (x.getString(0), x.getAs[Long]("node")) ->
-        x.getAs[Double]("rank_x_n")).toMap
-    nodes.foreach { v =>
-      val key = (if (v % 2 == 0) "order" else "part", v / 2)
-      assert(math.abs(got(key) - r(v) * n) < 1e-5,
-        s"node $v: got ${got(key)}, reference ${r(v) * n}")
-    }
-    // mass conservation: ranks sum to 1 (rank_x_n averages to 1)
-    assert(math.abs(got.values.sum / n - 1.0) < 1e-9)
+    r.view.mapValues(_ * n).toMap
+  }
+
+  private def pageRankSorted(edges: org.apache.spark.sql.DataFrame,
+      iters: Int): Seq[String] = {
+    val rows = GraphOps.pageRankOn(edges, iters)
+      .orderBy("ntype", "node").collect().map(_.toString).toSeq
     ScratchCache.releaseAll()
+    rows
+  }
+
+  test("pagerank matches an independent driver-side reference") {
+    // 0→2, 0→4, 2→4, 4→0, plus 6 (dangling sink of 0): hand-sized
+    // graph with a cycle AND a dangling node so redistribution matters
+    val base = Seq((0L, 2L), (0L, 4L), (2L, 4L), (4L, 0L), (0L, 6L))
+    val graphs = Seq(
+      "cycle + dangling sink" -> base,
+      // a repeated edge doubles its weight in 0's out-degree and in 2's
+      // in-sum; 2→2 feeds 2's own rank back to it
+      "duplicates + self-loop" -> (base ++ Seq((0L, 2L), (2L, 2L))),
+      // every leaf is dangling: most of the mass moves by redistribution
+      "all-dangling star" -> Seq((10L, 11L), (10L, 13L), (10L, 15L),
+        (10L, 17L), (10L, 19L)))
+    for ((name, es) <- graphs; iters <- Seq(1, 10)) {
+      val ref = driverPageRank(es, iters)
+      val got = GraphOps.pageRankOn(es.toDF("src", "dst"), iters).collect()
+        .map(x => (x.getString(0), x.getAs[Long]("node")) ->
+          x.getAs[Double]("rank_x_n")).toMap
+      ScratchCache.releaseAll()
+      assert(got.size == ref.size, s"$name: node count")
+      ref.foreach { case (v, want) =>
+        val key = (if (v % 2 == 0) "order" else "part", v / 2)
+        assert(math.abs(got(key) - want) < 1e-5,
+          s"$name, $iters rounds, node $v: got ${got(key)}, reference $want")
+      }
+      // mass conservation: ranks sum to 1 (rank_x_n averages to 1, up
+      // to its rounding to 6 places)
+      assert(math.abs(got.values.sum / ref.size - 1.0) <= 5e-7, name)
+      if (es == base && iters == 10)
+        assert(math.abs(got.values.sum / ref.size - 1.0) < 1e-9)
+    }
   }
 
   test("pagerank is partition-order independent (exact decimal sums)") {
-    import spark.implicits._
+    // the kernel's partitioner width is the session's shuffle partition
+    // count: 1 puts every node in one partition, 7 splits the graph;
+    // repartition(13) reorders the input rows
+    val es = (0L until 60L).map(i => (i % 11, (i * 5) % 13 + 3)) ++
+      Seq((3L, 3L), (3L, 3L), (20L, 40L))
+    val runs = for (p <- Seq(1, 7); layout <- Seq(false, true)) yield {
+      val s = spark.newSession()
+      s.conf.set("spark.sql.shuffle.partitions", p.toString)
+      val df = s.createDataFrame(es).toDF("src", "dst")
+      pageRankSorted(if (layout) df.repartition(13) else df, iters = 5)
+    }
+    assert(runs.head.nonEmpty)
+    runs.tail.foreach(r => assert(r == runs.head))
+  }
+
+  test("pagerank of an empty edge frame is empty") {
+    val out = GraphOps.pageRankOn(Seq.empty[(Long, Long)].toDF("src", "dst"),
+      iters = 5)
+    assert(out.columns.toSeq == Seq("ntype", "node", "rank_x_n"))
+    assert(out.collect().isEmpty)
+    ScratchCache.releaseAll()
+  }
+
+  test("pagerank's persisted RDDs are all freed by ScratchCache.releaseAll") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    def ours = sc.getPersistentRDDs.filter { case (id, rdd) =>
+      !before(id) && Option(rdd.name).exists(_.startsWith("pageRank."))
+    }
     val es = (0L until 40L).map(i => (i % 8, (i * 7) % 9 + 8))
-    val a = GraphOps.pageRankOn(es.toDF("src", "dst"), iters = 5)
-      .orderBy("ntype", "node").collect().map(_.toString).toSeq
+    val out = GraphOps.pageRankOn(es.toDF("src", "dst"), iters = 5)
+    val first = out.collect().map(_.toString).sorted.toSeq
+    // the graph and the last held round are persisted until release
+    assert(ours.size == 2, ours.values.map(_.name))
     ScratchCache.releaseAll()
-    val b = GraphOps.pageRankOn(es.toDF("src", "dst").repartition(13),
-        iters = 5)
-      .orderBy("ntype", "node").collect().map(_.toString).toSeq
-    ScratchCache.releaseAll()
-    assert(a == b && a.nonEmpty)
+    assert(ours.isEmpty, ours.values.map(_.name))
+    // lineage is intact: the released result still recomputes
+    assert(out.collect().map(_.toString).sorted.toSeq == first)
   }
 
   test("jaccard scores planted co-purchase overlaps exactly") {
