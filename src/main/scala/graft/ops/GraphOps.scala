@@ -652,49 +652,22 @@ object GraphOps {
     * lm = the nLandmarks smallest node ids, mh = (lmk, node, hop)
     * min-hop distances within maxHop, sym = the symmetric edge set.
     * Frontier rounds are the [[ssspOn]] discipline with a landmark key
-    * column; state is O(K·V).
-    *
-    * SESSION-SCOPED MEMO (r15): the four landmark keys each need this
-    * BFS over the SAME membership frame — without a memo a Verify pass
-    * runs it four times. [[LandmarkMemo]] keys on (session,
-    * canonicalized membership plan, nLandmarks, maxHop) and pins the
-    * memoized frames with EAGER localCheckpoints it owns (NOT
-    * ScratchCache-registered — the harness's per-key releaseAll must
-    * not free blocks a later key still reads; eager, so the blocks are
-    * fully materialized before any release can run). Disable with
-    * spark.graft.landmarks.memo=false — [[graft.Bench]] does, so every
-    * benched key still pays its own full BFS (the self-contained
-    * per-key timing contract). Values are bit-identical either way
-    * (same plan, only the caching layer differs — asserted in
-    * GraphOpsSpec). */
+    * column; state is O(K·V). Every frame is scratch: it lives until
+    * the next [[ScratchCache.releaseAll]]. */
   private def landmarkHops(membership: DataFrame, nLandmarks: Int,
-      maxHop: Int): (DataFrame, DataFrame, DataFrame) =
-    LandmarkMemo.getOrBuild(membership, nLandmarks, maxHop)(
-      pin => buildLandmarkHops(membership, nLandmarks, maxHop, pin))
-
-  /** The landmark BFS build. `pin` = memo mode: the three returned
-    * frames are eagerly pinned outside ScratchCache (memo-owned
-    * lifecycle); superseded frontier rounds stay Scratch-registered in
-    * both modes (they are dead once mh materializes). */
-  private def buildLandmarkHops(membership: DataFrame, nLandmarks: Int,
-      maxHop: Int, pin: Boolean): (DataFrame, DataFrame, DataFrame) = {
+      maxHop: Int): (DataFrame, DataFrame, DataFrame) = {
     val op = sizeTagged(membership.select(col("o"), col("p")).distinct())
     val ec = coPairs(op).distinct()
-    val symRaw = ec.unionByName(
-      ec.select(col("v").as("u"), col("u").as("v")))
-    // non-memo path: checkpoint + cached repartition (the coSymEdges
-    // r19 hybrid) so every BFS/sigma round consumes the static edge
-    // set in place via the merge-hinted joins below; the memo path
-    // keeps its pinned checkpoint (Verify-only, untimed — its rounds
-    // re-exchange the pinned set, values bit-identical either way)
-    val sym = if (pin) LandmarkMemo.pin(symRaw)
-      else ScratchCache.cache(trunc(symRaw)
-        .repartition(col("u")).sortWithinPartitions(col("u")))
+    // checkpoint + cached repartition (the [[coSymEdges]] layout) so
+    // every BFS/sigma round consumes the static edge set in place via
+    // the merge-hinted joins below
+    val sym = ScratchCache.cache(trunc(ec.unionByName(
+        ec.select(col("v").as("u"), col("u").as("v"))))
+      .repartition(col("u")).sortWithinPartitions(col("u")))
     // K smallest node ids: global sort-limit plans TakeOrderedAndProject
     // (K rows to the driver, no full sort) — deterministic landmarks
-    val lmRaw = sym.select(col("u").as("lmk")).distinct()
+    val lm = sym.select(col("u").as("lmk")).distinct()
       .orderBy(col("lmk")).limit(nLandmarks)
-    val lm = if (pin) LandmarkMemo.pin(lmRaw) else lmRaw
     val src = lm.select(col("lmk"), col("lmk").as("node"),
       lit(0L).as("hop"))
     // multi-source BFS keyed by (lmk, node); rename before the expand
@@ -711,8 +684,7 @@ object GraphOps {
         .unionByName(f.select(col("lmk"), col("node"), col("hop")))
         .groupBy(col("lmk"), col("node")).agg(min(col("hop")).as("hop")))
     }.toSeq
-    val mh = if (pin) LandmarkMemo.pin(rounds.last) else rounds.last
-    (lm, mh, sym)
+    (lm, rounds.last, sym)
   }
 
   /** Shortest-path COUNTS σ(landmark, node) by level-synchronous DP
@@ -955,14 +927,13 @@ object GraphOps {
       .select((col("l_orderkey") * 2).as("src"),
         (col("l_partkey") * 2 + 1).as("dst"))
       .distinct()
-    hitsOn(e, iters = longConf(e, "spark.graft.hits.iters", 4L).toInt)
+    hitsOn(e, iters = 4)
   }
 
   /** Core of q_graph_hits over any (src, dst) long edge frame (even
     * ids decode as type "order", odd as "part" on the wire). */
   def hitsOn(edgesIn: DataFrame, iters: Int): DataFrame = {
-    // iters < 1 would leave `auths` undefined below (reachable via the
-    // spark.graft.hits.iters conf) — fail fast with the contract
+    // iters < 1 would leave `auths` undefined below
     require(iters >= 1, s"hitsOn needs iters >= 1, got $iters")
     val D = DecimalType(38, 18)
     val k0 = (c: Column) => pmod(hash(c), lit(1))
@@ -1432,22 +1403,8 @@ object GraphOps {
     * on a 300-row graph — vs 1.3 s truncated). The LAZY checkpoint
     * truncates at construction time, stays job-free, materializes once
     * on first use; blocks release via ScratchCache like any scratch. */
-  /** Storage level for round checkpoints. Default MEMORY_AND_DISK
-    * (Spark's localCheckpoint default — spills instead of failing
-    * under memory pressure); `spark.graft.checkpoint.memoryOnly=true`
-    * switches to MEMORY_ONLY, the r15-verdict A/B for single-run
-    * variance on disk-contended hosts. MEMORY_ONLY + truncated
-    * lineage means an evicted block is unrecoverable, so the flag is
-    * an experiment knob, not the default. */
-  private[graft] def ckptLevel(s: SparkSession)
-      : org.apache.spark.storage.StorageLevel =
-    if (s.conf.getOption("spark.graft.checkpoint.memoryOnly")
-        .exists(_.trim.toBoolean))
-      org.apache.spark.storage.StorageLevel.MEMORY_ONLY
-    else org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-
   private def trunc(df: DataFrame): DataFrame = {
-    val t = df.localCheckpoint(false, ckptLevel(df.sparkSession))
+    val t = df.localCheckpoint(false)
     ScratchCache.defer(() => unpersistCheckpoint(t))
     t
   }
@@ -1768,65 +1725,44 @@ object GraphOps {
       .orderBy(col("size"))
   }
 
+  /** The shared co-purchase SYMMETRIC edge build — labelProp,
+    * modularity, louvain and louvain2 all start from this identical
+    * sym(u, v) frame (distinct membership → size-tagged co-pairs →
+    * distinct → ∪ reversed → repartition(u)).
+    *
+    * Layout: sym is CHECKPOINTED first (lineage truncated to a scan),
+    * then its repartition(u) is CACHED — the InMemoryRelation preserves
+    * HashPartitioning(u), which satisfies ClusteredDistribution for
+    * BOTH downstream aggregations ((u, lab) counting and the per-u
+    * argmax), so after this one shuffle every round is exchange-free.
+    * The per-round join broadcasts the (tiny) label frame and
+    * broadcast-hash preserves the streamed side's partitioning. When
+    * labels outgrow the broadcast threshold (labels are |V|-sized; a
+    * 100 TB graph's vocabulary may not fit), Catalyst falls back to a
+    * shuffled join and the rounds pay their shuffles — plan degrades,
+    * never breaks. Footprint note: until ScratchCache.releaseAll both
+    * the checkpoint blocks and the InMemoryRelation hold a full copy of
+    * sym — an accepted 2× scratch cost (sym is edge-sized but projected
+    * to two longs; the blocks are storage-evictable under pressure, and
+    * both copies release at query end). */
+  private def coSymEdges(membership: DataFrame): DataFrame = {
+    val op = sizeTagged(membership.select(col("o"), col("p")).distinct())
+    val ec = coPairs(op).distinct()
+    val built = ec.unionByName(
+        ec.select(col("v").as("u"), col("u").as("v")))
+    // checkpoint BEFORE the repartition: localCheckpoint drops
+    // outputPartitioning in Spark 4.x (see hitsOn), and caching the
+    // repartition without a checkpoint re-embeds the full co-pair plan
+    // in every round, where AQE re-planning blows up (louvain2
+    // 5.9 s -> 8.6-39 s)
+    ScratchCache.cache(trunc(built).repartition(col("u")))
+  }
+
   /** Shared LPA core (q_graph_label_prop, q_graph_modularity): the
     * 4-round synchronous propagation over the symmetric co-purchase
     * edge list. Returns (sym, labels) — sym is the checkpointed
     * DIRECTED doubling of the undirected edge set (each edge twice),
     * labels the final (node, lab) frame. */
-  /** The shared co-purchase SYMMETRIC edge build — labelProp,
-    * modularity, louvain and louvain2 all start from this identical
-    * sym(u, v) frame (distinct membership → size-tagged co-pairs →
-    * distinct → ∪ reversed → repartition(u)). MEMOIZED per (session,
-    * canonical membership plan) through [[EdgeMemo]], the
-    * LandmarkMemo discipline extended to the edge build (VERDICT r15
-    * #6): a Verify pass runs the four keys back-to-back on one
-    * dataset, so the memo pays the two distincts + co-pair join +
-    * shuffle ONCE instead of four times; Bench disables it
-    * (spark.graft.edges.memo=false) to keep per-key timings
-    * self-contained.
-    *
-    * Non-memo layout (r19 hybrid): sym is CHECKPOINTED first (lineage
-    * truncated to a scan), then its repartition(u) is CACHED — the
-    * InMemoryRelation preserves HashPartitioning(u), which satisfies
-    * ClusteredDistribution for BOTH downstream aggregations ((u, lab)
-    * counting and the per-u argmax), so after this one shuffle every
-    * round is exchange-free. The per-round join broadcasts the (tiny)
-    * label frame and broadcast-hash preserves the streamed side's
-    * partitioning. When labels outgrow the broadcast threshold (labels
-    * are |V|-sized; a 100 TB graph's vocabulary may not fit), Catalyst
-    * falls back to a shuffled join and the rounds pay their shuffles —
-    * plan degrades, never breaks. The EdgeMemo PIN path skips the
-    * repartition entirely (cross-key reuse cares about the rows, not
-    * the layout; consumers re-exchange as needed). Footprint note:
-    * until ScratchCache.releaseAll both the checkpoint blocks and the
-    * InMemoryRelation hold a full copy of sym — an accepted 2× scratch
-    * cost (sym is edge-sized but projected to two longs; the blocks
-    * are storage-evictable under pressure, and both copies release at
-    * query end). */
-  private def coSymEdges(membership: DataFrame): DataFrame =
-    EdgeMemo.getOrBuild(membership) { pin =>
-      val op = sizeTagged(membership.select(col("o"), col("p")).distinct())
-      val ec = coPairs(op).distinct()
-      val built = ec.unionByName(
-          ec.select(col("v").as("u"), col("u").as("v")))
-      // non-memo path: CHECKPOINT the (heavy) build, then CACHE its
-      // repartition (r19). localCheckpoint drops outputPartitioning
-      // in Spark 4.x (measured — see hitsOn), so the old
-      // trunc(repartition(u)) re-entered every LPA/Louvain round with
-      // UnknownPartitioning and each round re-exchanged its
-      // aggregations. Caching the repartitioned build directly was
-      // A/B'd and REJECTED: every round then re-embeds the full
-      // co-pair logical plan and AQE re-planning blows up (louvain2
-      // 5.9 s -> 8.6-39 s, the 21-88 s labelProp lesson). The hybrid
-      // keeps both properties: the checkpoint truncates lineage to a
-      // scan, and the cached repartition over that scan is a
-      // TINY-plan InMemoryRelation whose hash(u) satisfies both
-      // per-round aggregation distributions — rounds are genuinely
-      // exchange-free, as the design always claimed.
-      if (pin) EdgeMemo.pin(built)
-      else ScratchCache.cache(trunc(built).repartition(col("u")))
-    }
-
   private def lpaLabels(membership: DataFrame): (DataFrame, DataFrame) = {
     val sym = coSymEdges(membership)
     var lab = sym.select(col("u").as("node")).distinct()
@@ -1996,7 +1932,7 @@ object GraphOps {
   /** Core of q_graph_louvain over any (o, p) membership frame. */
   def louvainOn(membership: DataFrame): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
-    val sym = coSymEdges(membership) // shared memoized build
+    val sym = coSymEdges(membership)
     val deg = ScratchCache.cache(
       sym.groupBy(col("u")).agg(count(lit(1)).as("dg")))
     val m2 = sym.count() // 2m, one scalar count job
@@ -2072,7 +2008,7 @@ object GraphOps {
   /** Core of q_graph_louvain2 over any (o, p) membership frame. */
   def louvain2On(membership: DataFrame): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
-    val sym = coSymEdges(membership) // shared memoized build
+    val sym = coSymEdges(membership)
     val deg = ScratchCache.cache(
       sym.groupBy(col("u")).agg(count(lit(1)).as("dg")))
     val m2 = sym.count() // 2m, one scalar count job
@@ -2204,17 +2140,12 @@ object GraphOps {
     val ec = coPairs(op).distinct().pipe(ScratchCache.cache)
     val sym = ec.unionByName(
       ec.select(col("v").as("u"), col("u").as("v")))
-    // localCheckpoint (the labelProp trunc pattern) gives Catalyst the
-    // REAL size of the degree table, so the two degree joins broadcast
+    // the checkpoint gives Catalyst the REAL size of the degree
+    // table, so the two degree joins broadcast
     // while |V| is small and degrade to shuffle joins only when the
     // vertex table genuinely outgrows the threshold — a cached agg's
     // estimated stats would force sort-merge even at test scale
-    val deg = {
-      val t = sym.groupBy(col("u")).agg(count(lit(1)).as("dg"))
-        .localCheckpoint(false)
-      ScratchCache.defer(() => unpersistCheckpoint(t))
-      t
-    }
+    val deg = trunc(sym.groupBy(col("u")).agg(count(lit(1)).as("dg")))
     val dd = DecimalType(20, 0)
     val e = sym
       .join(deg.select(col("u"), col("dg").as("du")), "u")
@@ -2264,149 +2195,5 @@ object GraphOps {
       .groupBy(col("comp")).agg(count(lit(1)).as("size"))
       .groupBy(col("size")).agg(count(lit(1)).as("n_components"))
       .orderBy(col("size"))
-  }
-}
-
-/** Session-scoped memo for the shared co-purchase symmetric edge
-  * build (labelProp / modularity / louvain / louvain2) — the
-  * [[LandmarkMemo]] discipline extended to the edge build (VERDICT
-  * r15 #6). Same contract: keyed on (session, canonicalized
-  * membership plan); entries are EAGER memo-owned localCheckpoints;
-  * a miss evicts the previous entry with its pins' release DEFERRED
-  * to the ScratchCache drain; `spark.graft.edges.memo=false` (Bench)
-  * bypasses it for self-contained per-key timings. */
-private[graft] object EdgeMemo {
-  private val entries = scala.collection.concurrent.TrieMap.empty[
-    (SparkSession, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan),
-    DataFrame]
-  private val owned =
-    new java.util.concurrent.ConcurrentLinkedQueue[() => Unit]
-  /** Number of edge builds actually run (test observability). */
-  @volatile private[graft] var builds: Long = 0L
-
-  /** Eagerly pin `df` with a memo-owned localCheckpoint. */
-  private[ops] def pin(df: DataFrame): DataFrame = {
-    val t = df.localCheckpoint(true)
-    owned.add(() => GraphOps.unpersistCheckpoint(t))
-    t
-  }
-
-  private[ops] def getOrBuild(membership: DataFrame)
-      (build: Boolean => DataFrame): DataFrame = {
-    val s = membership.sparkSession
-    val enabled = s.conf.getOption("spark.graft.edges.memo")
-      .forall(_.trim.toBoolean)
-    if (!enabled) { builds += 1; build(false) }
-    else {
-      val k = (s, membership.queryExecution.analyzed.canonicalized)
-      entries.get(k) match {
-        case Some(v) => v
-        case None =>
-          // defer evicted pins to the harness drain — the LandmarkMemo
-          // eviction contract (see there)
-          entries.clear()
-          var r = owned.poll()
-          while (r != null) { ScratchCache.defer(r); r = owned.poll() }
-          val v = { builds += 1; build(true) }
-          entries.put(k, v)
-          v
-      }
-    }
-  }
-
-  /** Unpersist every memo-owned checkpoint and forget all entries. */
-  def clear(): Unit = {
-    entries.clear()
-    var r = owned.poll()
-    while (r != null) { r(); r = owned.poll() }
-  }
-}
-
-/** Session-scoped memo for the landmark BFS shared by the four
-  * landmark keys (closeness / betweenness / brandes / ecc) — VERDICT
-  * r14 ask #4: one Verify pass was running the identical BFS four
-  * times. Keyed on (session, CANONICALIZED membership plan,
-  * nLandmarks, maxHop): the four demo keys build membership from the
-  * memoized [[graft.Tables.lineitem]] frame with the same
-  * filter/select, so their canonicalized plans are equal; any other
-  * frame (tests' hand-built fixtures, a repartitioned copy) misses and
-  * builds fresh.
-  *
-  * Lifecycle: memoized frames are EAGER localCheckpoints owned HERE,
-  * not ScratchCache-registered — Verify's per-key releaseAll must not
-  * free blocks a later landmark key still reads, and eager
-  * materialization means no lazy dependency on scratch blocks that a
-  * release could strand. [[clear]] (tests / notebooks) unpersists and
-  * forgets everything. Memory: lm is K rows, mh is O(K·V), sym is the
-  * symmetric edge set — the same blocks a single key already
-  * checkpointed, now simply outliving one key instead of being rebuilt
-  * four times. */
-private[graft] object LandmarkMemo {
-  private val entries = scala.collection.concurrent.TrieMap.empty[
-    (SparkSession, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-      Int, Int),
-    (DataFrame, DataFrame, DataFrame)]
-  private val owned =
-    new java.util.concurrent.ConcurrentLinkedQueue[() => Unit]
-  /** Number of BFS builds actually run (test observability). */
-  @volatile private[graft] var builds: Long = 0L
-
-  /** Eagerly pin `df` with a memo-owned localCheckpoint. */
-  private[ops] def pin(df: DataFrame): DataFrame = {
-    val t = df.localCheckpoint(true)
-    owned.add(() => GraphOps.unpersistCheckpoint(t))
-    t
-  }
-
-  /** Memo lookup; on miss, `build(pin)` runs with pin = whether the
-    * memo is enabled (spark.graft.landmarks.memo, default true).
-    *
-    * SINGLE-ENTRY POLICY: a miss EVICTS the previous entry, so LIVE
-    * pinned blocks are bounded by one BFS (sym + mh + lm) — the four
-    * landmark keys share one dataset per pass, so eviction only fires
-    * on a dataset (or fixture) change, never between the keys the
-    * memo exists for. Evicted pins are NOT unpersisted inline: a
-    * frame returned from the evicted entry may still be
-    * unmaterialized with checkpoint-truncated lineage, so their
-    * release is handed to [[ScratchCache]] and happens at the next
-    * harness drain (releaseAll runs only after every result has been
-    * consumed) — no caller-side materialization ordering is required
-    * (ADVICE r15). */
-  private[ops] def getOrBuild(membership: DataFrame, nLandmarks: Int,
-      maxHop: Int)(build: Boolean => (DataFrame, DataFrame, DataFrame))
-      : (DataFrame, DataFrame, DataFrame) = {
-    val s = membership.sparkSession
-    val enabled = s.conf.getOption("spark.graft.landmarks.memo")
-      .forall(_.trim.toBoolean)
-    if (!enabled) { builds += 1; build(false) }
-    else {
-      val k = (s, membership.queryExecution.analyzed.canonicalized,
-        nLandmarks, maxHop)
-      entries.get(k) match {
-        case Some(v) => v
-        case None =>
-          // EVICT the previous entry but DEFER its block release to
-          // the harness-level ScratchCache drain: a frame returned
-          // from that entry may still be unmaterialized, and the
-          // checkpoint truncated its lineage, so an immediate
-          // unpersist would strand it with missing blocks (ADVICE
-          // r15). ScratchCache.releaseAll runs only once the harness
-          // has consumed every result, which is exactly when the old
-          // pins become safe to drop.
-          entries.clear()
-          var r = owned.poll()
-          while (r != null) { ScratchCache.defer(r); r = owned.poll() }
-          val v = { builds += 1; build(true) }
-          entries.put(k, v)
-          v
-      }
-    }
-  }
-
-  /** Unpersist every memo-owned checkpoint and forget all entries. */
-  def clear(): Unit = {
-    entries.clear()
-    var r = owned.poll()
-    while (r != null) { r(); r = owned.poll() }
   }
 }

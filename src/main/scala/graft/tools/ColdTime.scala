@@ -21,8 +21,6 @@ object ColdTime {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.codegen.cache.maxEntries", "20000")
-      .config("spark.graft.landmarks.memo", "false")
-      .config("spark.graft.edges.memo", "false")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

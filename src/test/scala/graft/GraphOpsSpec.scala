@@ -597,87 +597,27 @@ class GraphOpsSpec extends GraftSuite {
     assert(out.toSeq == out2.toSeq)
   }
 
-  test("landmark memo: one BFS serves multiple landmark keys across a " +
-      "releaseAll, values bit-identical to memo-off") {
+  test("landmark and co-purchase graph operators leave no persisted " +
+      "RDD after ScratchCache.releaseAll") {
     import spark.implicits._
-    val m = Seq((1L, 1L), (1L, 2L), (2L, 2L), (2L, 3L), (3L, 3L),
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    def ours = sc.getPersistentRDDs.filter { case (id, _) => !before(id) }
+    val path = Seq((1L, 1L), (1L, 2L), (2L, 2L), (2L, 3L), (3L, 3L),
       (3L, 4L), (4L, 4L), (4L, 5L), (5L, 5L), (5L, 6L)).toDF("o", "p")
-    LandmarkMemo.clear()
-    val b0 = LandmarkMemo.builds
-    val close1 = GraphOps.closenessOn(m, nLandmarks = 8, maxHop = 3)
-      .collect().map(_.toSeq).toSeq
-    assert(LandmarkMemo.builds == b0 + 1)
-    // the Verify harness frees scratch between keys — memo-owned
-    // blocks must survive it
-    ScratchCache.releaseAll()
-    val ecc1 = GraphOps.eccentricityOn(m, nLandmarks = 8, maxHop = 3)
-      .collect().map(_.toSeq).toSeq
-    val btw1 = GraphOps.betweennessOn(m, nLandmarks = 8, maxHop = 3)
-      .collect().map(_.toSeq).toSeq
-    ScratchCache.releaseAll()
-    assert(LandmarkMemo.builds == b0 + 1,
-      "ecc + betweenness over the same membership must reuse the " +
-        s"memoized BFS (builds went ${LandmarkMemo.builds - b0})")
-    LandmarkMemo.clear()
-    // memo-off twin: same values, one build per key
-    spark.conf.set("spark.graft.landmarks.memo", "false")
-    try {
-      val close2 = GraphOps.closenessOn(m, nLandmarks = 8, maxHop = 3)
-        .collect().map(_.toSeq).toSeq
-      val ecc2 = GraphOps.eccentricityOn(m, nLandmarks = 8, maxHop = 3)
-        .collect().map(_.toSeq).toSeq
-      val btw2 = GraphOps.betweennessOn(m, nLandmarks = 8, maxHop = 3)
-        .collect().map(_.toSeq).toSeq
-      ScratchCache.releaseAll()
-      assert(LandmarkMemo.builds == b0 + 4)
-      assert(close1 == close2, "closeness must not depend on the memo")
-      assert(ecc1 == ecc2, "ecc must not depend on the memo")
-      assert(btw1 == btw2, "betweenness must not depend on the memo")
-    } finally {
-      spark.conf.unset("spark.graft.landmarks.memo")
-      LandmarkMemo.clear()
-      ScratchCache.releaseAll()
-    }
-  }
-
-  test("edge memo: one co-purchase edge build serves labelProp/" +
-      "modularity/louvain/louvain2 across releaseAll, values " +
-      "bit-identical to memo-off") {
-    import spark.implicits._
-    val m = Seq((1L, 0L), (1L, 4L), (2L, 4L), (2L, 8L), (3L, 8L),
+    val chain = Seq((1L, 0L), (1L, 4L), (2L, 4L), (2L, 8L), (3L, 8L),
       (3L, 12L), (4L, 12L), (4L, 16L), (5L, 16L), (5L, 20L))
       .toDF("o", "p")
-    EdgeMemo.clear()
-    val b0 = EdgeMemo.builds
-    val lp1 = GraphOps.labelPropOn(m).collect().map(_.toSeq).toSeq
-    assert(EdgeMemo.builds == b0 + 1)
-    ScratchCache.releaseAll() // memo-owned blocks must survive it
-    val md1 = GraphOps.modularityOn(m).collect().map(_.toSeq).toSeq
-    val lv1 = GraphOps.louvainOn(m).collect().map(_.toSeq).toSeq
-    val l21 = GraphOps.louvain2On(m).collect().map(_.toSeq).toSeq
+    Seq(GraphOps.closenessOn(path, nLandmarks = 8, maxHop = 3),
+        GraphOps.betweennessOn(path, nLandmarks = 8, maxHop = 3),
+        GraphOps.betweennessBrandesOn(path, nLandmarks = 8, maxHop = 3),
+        GraphOps.eccentricityOn(path, nLandmarks = 8, maxHop = 3),
+        GraphOps.labelPropOn(chain), GraphOps.modularityOn(chain),
+        GraphOps.louvainOn(chain), GraphOps.louvain2On(chain))
+      .foreach(df => assert(df.collect().nonEmpty))
+    assert(ours.nonEmpty, "the operators persisted no scratch at all")
     ScratchCache.releaseAll()
-    assert(EdgeMemo.builds == b0 + 1,
-      "the four community keys over the same membership must reuse " +
-        s"the memoized edge build (builds went ${EdgeMemo.builds - b0})")
-    EdgeMemo.clear()
-    // memo-off twin: same values, one build per key
-    spark.conf.set("spark.graft.edges.memo", "false")
-    try {
-      val lp2 = GraphOps.labelPropOn(m).collect().map(_.toSeq).toSeq
-      val md2 = GraphOps.modularityOn(m).collect().map(_.toSeq).toSeq
-      val lv2 = GraphOps.louvainOn(m).collect().map(_.toSeq).toSeq
-      val l22 = GraphOps.louvain2On(m).collect().map(_.toSeq).toSeq
-      ScratchCache.releaseAll()
-      assert(EdgeMemo.builds == b0 + 5)
-      assert(lp1 == lp2, "labelProp must not depend on the memo")
-      assert(md1 == md2, "modularity must not depend on the memo")
-      assert(lv1 == lv2, "louvain must not depend on the memo")
-      assert(l21 == l22, "louvain2 must not depend on the memo")
-    } finally {
-      spark.conf.unset("spark.graft.edges.memo")
-      EdgeMemo.clear()
-      ScratchCache.releaseAll()
-    }
+    assert(ours.isEmpty, ours.values.map(r => s"${r.id} ${r.name}"))
   }
 
   test("ecc: when truncation bites, the radius stat drops its " +
